@@ -1,7 +1,19 @@
 package graft.core
 
+import java.nio.charset.StandardCharsets
+
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
+import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.datasources.{HadoopFileLinesReader, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, NullType, StructType}
 
 /** Source readers — SURVEY.md §2.1 (S1–S9, S13).
   *
@@ -11,10 +23,17 @@ import org.apache.spark.sql.types.StructType
   * `common/evidence.py:156-157`, nullValue `IMPC.py:179-190`, metadata-row
   * skip `ClinGen.py:66-70`), re-expressed on `DataFrameReader`.
   *
-  * Scale notes: all readers return lazy scans; schema-forced CSV avoids the
-  * extra inference pass over the data (inference reads the whole file once
-  * before the real scan — at 100 TB that is a full extra job, so parsers
-  * that know their schema must pass one).
+  * Scale notes: building a DataFrame here runs no Spark job, with these
+  * exceptions:
+  *   - JSON without a schema runs an inference job over its input;
+  *   - parquet runs a job that reads a file footer for its schema;
+  *   - CSV/TSV schema inference ([[readPath]]) runs on the driver only
+  *     when the input is one file no larger than one split
+  *     (`spark.sql.files.maxPartitionBytes`). Directories, globs and
+  *     larger files keep Spark's distributed inference: two jobs, one for
+  *     the header and one pass over every line.
+  * Schema-forced CSV skips inference altogether, so parsers that know
+  * their schema should pass one.
   */
 object Readers {
 
@@ -29,17 +48,26 @@ object Readers {
       nullValue: Option[String] = None,
       inferSchema: Boolean = false,
   ): DataFrame = {
-    var r = spark.read
-      .option("sep", sep)
-      .option("header", header.toString)
-      .option("multiLine", multiLine.toString)
-      .option("quote", "\"")
-      .option("escape", "\"")
+    var r = spark.read.options(csvOptions(sep, header, multiLine, nullValue))
     schema.foreach(s => r = r.schema(s))
     if (schema.isEmpty && inferSchema) r = r.option("inferSchema", "true")
-    nullValue.foreach(v => r = r.option("nullValue", v))
     r.csv(path)
   }
+
+  /** The reader options [[csv]] passes to Spark's CSV source. */
+  private def csvOptions(
+      sep: String,
+      header: Boolean,
+      multiLine: Boolean,
+      nullValue: Option[String],
+  ): Map[String, String] =
+    Map(
+      "sep" -> sep,
+      "header" -> header.toString,
+      "multiLine" -> multiLine.toString,
+      "quote" -> "\"",
+      "escape" -> "\"",
+    ) ++ nullValue.map("nullValue" -> _)
 
   /** TSV shorthand (the dominant delimited format in the reference). */
   def tsv(
@@ -108,8 +136,8 @@ object Readers {
       Xlsx.read(spark, path, Xlsx.sheetNames(path).head)
     else if (lower.endsWith(".json") || lower.endsWith(".jsonl") || lower.endsWith(".ndjson"))
       json(spark, path)
-    else if (lower.endsWith(".tsv") || lower.endsWith(".tab")) tsv(spark, path, inferSchema = true)
-    else if (lower.endsWith(".csv")) csv(spark, path, inferSchema = true)
+    else if (lower.endsWith(".tsv") || lower.endsWith(".tab")) inferredCsv(spark, path, sep = "\t")
+    else if (lower.endsWith(".csv")) inferredCsv(spark, path, sep = ",")
     else {
       val f = new java.io.File(path)
       if (f.isDirectory && Option(f.list()).exists(_.exists(_.contains(".json"))))
@@ -118,16 +146,104 @@ object Readers {
     }
   }
 
+  /** A header-true, `inferSchema` CSV scan whose schema, when the input is
+    * one split, comes from the driver instead of Spark's inference jobs.
+    */
+  private def inferredCsv(spark: SparkSession, path: String, sep: String): DataFrame = {
+    val options = csvOptions(sep, header = true, multiLine = false, nullValue = None)
+    val schema = inferCsvSchemaOnDriver(spark, path, options + ("inferSchema" -> "true"))
+    csv(spark, path, sep = sep, schema = schema, inferSchema = true)
+  }
+
+  /** Spark's CSV schema inference for a one-split file, run on the driver;
+    * `None` for any input that is not one plain file of at most
+    * `spark.sql.files.maxPartitionBytes` (the caller then lets Spark infer).
+    *
+    * The steps are those of Spark's `TextInputCSVDataSource.infer` over a
+    * single partition, calling the same Spark code: `CSVOptions` built as
+    * `CSVFileFormat` builds them; the header is the first line left by
+    * `CSVUtils.filterCommentAndEmpty` (non-empty after trimming), made
+    * safe by `makeSafeHeader`; every other line minus copies of the
+    * header (`filterHeaderLine`) is tokenized and folded through
+    * `CSVInferSchema.inferRowType`; `toStructFields` names the result. An
+    * input with no header line gets the empty schema, as in Spark. The
+    * options never set `samplingRatio`, so no sampling step applies.
+    */
+  private def inferCsvSchemaOnDriver(
+      spark: SparkSession,
+      path: String,
+      options: Map[String, String],
+  ): Option[StructType] = {
+    val state = spark.asInstanceOf[classic.SparkSession].sessionState
+    val conf = state.conf
+    val hadoopConf = state.newHadoopConfWithOptions(options)
+    singleSplitFile(hadoopConf, path, conf.filesMaxPartitionBytes).map { status =>
+      // Inference reads SQLConf.get (datetime parser policy, timestamp
+      // type); pin it to this session's conf whatever thread calls.
+      SQLConf.withExistingConf(conf) {
+        val parsed = new CSVOptions(
+          options, conf.csvColumnPruning, conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+        withFileLines(hadoopConf, status) { lines =>
+          val content = CSVUtils.filterCommentAndEmpty(lines, parsed).buffered
+          val headerRow = content.headOption.map(new CsvParser(parsed.asParserSettings).parseLine(_))
+          headerRow match {
+            case Some(firstRow) if firstRow != null =>
+              val firstLine = content.head
+              val header = CSVUtils.makeSafeHeader(firstRow, conf.caseSensitiveAnalysis, parsed)
+              val inference = new CSVInferSchema(parsed)
+              val tokenizer = new CsvParser(parsed.asParserSettings)
+              val rootTypes = CSVUtils.filterHeaderLine(content, firstLine, parsed)
+                .map(tokenizer.parseLine)
+                .foldLeft(Array.fill[DataType](header.length)(NullType))(inference.inferRowType)
+              StructType(inference.toStructFields(rootTypes, header))
+            case _ => StructType(Nil)
+          }
+        }
+      }
+    }
+  }
+
+  /** The status of `path` when it names one visible file of at most
+    * `maxBytes`; `None` for globs (Spark expands `{}[]*?\`), directories,
+    * hidden names (`_`/`.` prefixes, which Spark's listing treats
+    * specially), larger files and missing paths.
+    */
+  private def singleSplitFile(hadoopConf: Configuration, path: String, maxBytes: Long): Option[FileStatus] =
+    if (path.exists("{}[]*?\\".contains(_))) None
+    else {
+      val p = new Path(path)
+      val fs = p.getFileSystem(hadoopConf)
+      scala.util.Try(fs.getFileStatus(p)).toOption.filter { st =>
+        val name = st.getPath.getName
+        st.isFile && st.getLen <= maxBytes && !name.startsWith("_") && !name.startsWith(".")
+      }
+    }
+
+  /** Streams a file's lines on the driver through Spark's own line reader
+    * (`HadoopFileLinesReader`: the Hadoop FS of the path, the compression
+    * codec its extension names, `\n`/`\r`/`\r\n` line ends), decoded as
+    * UTF-8 — the lines Spark's text and CSV scans see when no `lineSep` or
+    * `encoding` option is set, as in this object. The reader is closed
+    * when `f` returns, so `f` must consume what it needs.
+    */
+  private def withFileLines[T](hadoopConf: Configuration, status: FileStatus)(f: Iterator[String] => T): T = {
+    val file = PartitionedFile(InternalRow.empty, SparkPath.fromPath(status.getPath), 0L, status.getLen)
+    val reader = new HadoopFileLinesReader(file, hadoopConf)
+    try f(reader.map(t => new String(t.getBytes, 0, t.getLength, StandardCharsets.UTF_8)))
+    finally reader.close()
+  }
+
   /** S10: multi-row-header delimited scan (reference CvdiGeneBurden Excel
     * sheets with pandas `header=[0,1,2]` + horizontal ffill,
     * `CvdiGeneBurden.py:100-150`; Excel itself is out of engine scope —
     * inputs arrive pre-converted to CSV, this reproduces the multiindex
     * flattening).
     *
-    * The first `headerRows` lines are read on the driver (tiny), each row
-    * forward-filled horizontally (merged-cell semantics), and the
-    * per-column name is the '_'-joined non-empty parts. Data rows are then
-    * parsed with [[csvSkipRows]] under the synthesized all-string schema.
+    * The first `headerRows` lines are streamed on the driver (no Spark
+    * job; `path` must name one file), each row forward-filled horizontally
+    * (merged-cell semantics), and the per-column name is the '_'-joined
+    * non-empty parts. Data rows are then parsed with [[csvSkipRows]] under
+    * the synthesized all-string schema.
     */
   def csvMultiHeader(
       spark: SparkSession,
@@ -135,10 +251,12 @@ object Readers {
       headerRows: Int,
       sep: String = ",",
   ): DataFrame = {
-    // Through the Spark reader (not java.io): works on any Hadoop FS
-    // (hdfs://, s3://, …), and take(n) on a single file preserves the
-    // leading-line order.
-    val headerLines = spark.read.textFile(path).take(headerRows).toList
+    // Through the Hadoop FS (not java.io): works on hdfs://, s3://, ….
+    val hadoopConf = spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+    val p = new Path(path)
+    val status = p.getFileSystem(hadoopConf).getFileStatus(p)
+    require(status.isFile, s"csvMultiHeader reads one file; $path is not a file")
+    val headerLines = withFileLines(hadoopConf, status)(_.take(headerRows).toList)
     val cells = headerLines.map(_.split(java.util.regex.Pattern.quote(sep), -1).toSeq)
     val names = multiHeaderNames(cells)
     val schema = StructType(names.map(n => org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.StringType)))

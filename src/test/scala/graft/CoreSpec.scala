@@ -41,6 +41,108 @@ class CoreSpec extends SparkTestBase {
     assert(Readers.readPath(spark, s"$dir/t.json").count() == 1)
   }
 
+  // Edge cells for CSV/TSV inference: blank and whitespace-only lines
+  // (before the header too), duplicate and empty header names, a quoted
+  // separator in the header and in cells, doubled quotes, `;`-joined
+  // multi-value cells, empty cells, 1e-300 and exact 0, booleans, ISO dates
+  // and timestamps, integers beyond Int and beyond Long range.
+  private val inferFixture = Seq(
+    "",
+    "   ",
+    "id,score,,id,flag,day,ts,big,huge,multi,\"quoted,name\",note",
+    "1,1e-300,x,10,true,2024-01-31,2024-01-31 10:00:00,3000000000,1,a;b;c,\"he said \"\"hi\"\"\",",
+    "2,0,,11,false,2023-12-01,2023-12-01 00:00:00,-3000000000,9223372036854775808,d,\"x, y\",z",
+    "",
+    " ",
+    "3,,y,,,,,,,,,",
+    "4,0.5,z,12,TRUE,2022-02-28,2022-02-28 23:59:59,1,-2,e;f,\"\"\"lead\",w",
+  ).mkString("", "\n", "\n")
+
+  private def write(path: String, text: String): String = {
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path), text)
+    path
+  }
+
+  /** `readPath`'s schema and rows equal Spark's own `inferSchema` scan
+    * with the same reader options.
+    */
+  private def assertInferParity(path: String, sep: String): Unit = {
+    val got = Readers.readPath(spark, path)
+    val want = Readers.csv(spark, path, sep = sep, inferSchema = true)
+    assert(got.schema == want.schema, s"$path: ${got.schema.treeString} vs ${want.schema.treeString}")
+    assert(got.collect().toSeq == want.collect().toSeq, path)
+  }
+
+  private def withMaxPartitionBytes[T](bytes: Long)(body: => T): T = {
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, bytes.toString)
+    try body
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Spark jobs started while `body` runs (listener bus drained on both
+    * sides, so only this body's jobs are counted).
+    */
+  private def jobsDuring(body: => Any): Int = {
+    org.apache.spark.sql.GraftShim.drainListenerBus(spark)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.sql.GraftShim.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("Readers.readPath CSV/TSV schemas and rows equal Spark's inferSchema scan") {
+    val dir = tmpDir("infer_parity")
+    val csv = write(s"$dir/in.csv", inferFixture)
+    val tsv = write(s"$dir/in.tsv", inferFixture.replace(',', '\t'))
+    val gz = s"$dir/in.csv.gz"
+    scala.util.Using.resource(new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(gz))) {
+      _.write(inferFixture.getBytes("UTF-8"))
+    }
+    val headerOnly = write(s"$dir/header_only.csv", "a,b,,a\n")
+    val empty = write(s"$dir/empty.csv", "")
+    for (p <- Seq(csv, gz, headerOnly, empty)) assertInferParity(p, ",")
+    assertInferParity(tsv, "\t")
+    // The fixture really exercises the inferred types.
+    val types = Readers.readPath(spark, csv).schema.fields.map(f => f.name -> f.dataType).toMap
+    assert(types("score") == DoubleType && types("flag") == BooleanType && types("big") == LongType)
+    assert(types("huge").isInstanceOf[DecimalType] && types("ts") == TimestampType)
+    assert(Readers.readPath(spark, tsv).columns.contains("quoted,name".replace(',', '\t')))
+
+    // Fallbacks to Spark's distributed inference: a directory of parts,
+    // and a file larger than one split.
+    val parts = s"$dir/parts.csv"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(parts))
+    write(s"$parts/part-0.csv", inferFixture)
+    write(s"$parts/part-1.csv", inferFixture)
+    assertInferParity(parts, ",")
+    withMaxPartitionBytes(64) {
+      assertInferParity(csv, ",")
+      assertInferParity(tsv, "\t")
+    }
+  }
+
+  test("Readers.readPath builds a CSV/TSV DataFrame without running a Spark job") {
+    val dir = tmpDir("infer_nojob")
+    val csv = write(s"$dir/in.csv", inferFixture)
+    val tsv = write(s"$dir/in.tsv", inferFixture.replace(',', '\t'))
+    assert(jobsDuring(Readers.readPath(spark, csv)) == 0)
+    assert(jobsDuring(Readers.readPath(spark, tsv)) == 0)
+    val multi = write(s"$dir/multi.csv", "id,,metrics,\n,name,p,beta\n1,BRCA1,0.5,-1.25\n")
+    assert(jobsDuring(Readers.csvMultiHeader(spark, multi, headerRows = 2)) == 0)
+    // The forced fallback does run Spark's inference jobs, so the count
+    // above tells the two paths apart.
+    assert(withMaxPartitionBytes(64)(jobsDuring(Readers.readPath(spark, csv))) > 0)
+  }
+
   test("Writers.writeJsonGzSingle produces exactly one gz json file (K1)") {
     val dir = tmpDir("sink")
     val out = s"$dir/evidence.json.gz"
