@@ -10,8 +10,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
 import org.apache.spark.sql.classic
-import org.apache.spark.sql.execution.datasources.{HadoopFileLinesReader, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFileLinesReader, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.execution.datasources.text.TextFileFormat
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{DataType, NullType, StructType}
 
@@ -28,10 +29,14 @@ import org.apache.spark.sql.types.{DataType, NullType, StructType}
   *   - JSON without a schema runs an inference job over its input;
   *   - parquet runs a job that reads a file footer for its schema;
   *   - CSV/TSV schema inference ([[readPath]]) runs on the driver only
-  *     when the input is one file no larger than one split
-  *     (`spark.sql.files.maxPartitionBytes`). Directories, globs and
-  *     larger files keep Spark's distributed inference: two jobs, one for
-  *     the header and one pass over every line.
+  *     when Spark would read the input in one task: one file that is
+  *     compressed with a non-splittable codec (gzip) or no larger than
+  *     Spark's split size `FilePartition.maxSplitBytes`, i.e.
+  *     min(`maxPartitionBytes`, max(`openCostInBytes`, (size +
+  *     `openCostInBytes`) / `minPartitionNum`)) — under `local[4]` with
+  *     default confs, about 4 MB. Directories, globs and multi-split
+  *     files keep Spark's distributed inference: two jobs, one for the
+  *     header and one pass over every line.
   * Schema-forced CSV skips inference altogether, so parsers that know
   * their schema should pass one.
   */
@@ -146,8 +151,8 @@ object Readers {
     }
   }
 
-  /** A header-true, `inferSchema` CSV scan whose schema, when the input is
-    * one split, comes from the driver instead of Spark's inference jobs.
+  /** A header-true, `inferSchema` CSV scan whose schema, when Spark would
+    * infer it in one task, comes from the driver instead of Spark's jobs.
     */
   private def inferredCsv(spark: SparkSession, path: String, sep: String): DataFrame = {
     val options = csvOptions(sep, header = true, multiLine = false, nullValue = None)
@@ -155,16 +160,18 @@ object Readers {
     csv(spark, path, sep = sep, schema = schema, inferSchema = true)
   }
 
-  /** Spark's CSV schema inference for a one-split file, run on the driver;
-    * `None` for any input that is not one plain file of at most
-    * `spark.sql.files.maxPartitionBytes` (the caller then lets Spark infer).
+  /** Spark's CSV schema inference for a one-task file, run on the driver;
+    * `None` for any input Spark would not read in one task (see
+    * [[readsInOneTask]]); the caller then lets Spark infer.
     *
-    * The steps are those of Spark's `TextInputCSVDataSource.infer` over a
-    * single partition, calling the same Spark code: `CSVOptions` built as
-    * `CSVFileFormat` builds them; the header is the first line left by
-    * `CSVUtils.filterCommentAndEmpty` (non-empty after trimming), made
-    * safe by `makeSafeHeader`; every other line minus copies of the
-    * header (`filterHeaderLine`) is tokenized and folded through
+    * The steps are those of Spark's `TextInputCSVDataSource.infer`, calling
+    * the same Spark code: `CSVOptions` built as `CSVFileFormat` builds
+    * them; the header is the first line that is not all spaces (Spark's
+    * Dataset rule, `length(trim(value)) > 0`, where SQL `trim` strips
+    * spaces only), parsed and made safe by `makeSafeHeader`; every line
+    * left by the Iterator rule of `CSVUtils.filterCommentAndEmpty` (which
+    * also drops tab-only lines), minus copies of the header
+    * (`filterHeaderLine`), is tokenized and folded through
     * `CSVInferSchema.inferRowType`; `toStructFields` names the result. An
     * input with no header line gets the empty schema, as in Spark. The
     * options never set `samplingRatio`, so no sampling step applies.
@@ -177,14 +184,18 @@ object Readers {
     val state = spark.asInstanceOf[classic.SparkSession].sessionState
     val conf = state.conf
     val hadoopConf = state.newHadoopConfWithOptions(options)
-    singleSplitFile(hadoopConf, path, conf.filesMaxPartitionBytes).map { status =>
+    singleFile(hadoopConf, path).filter(readsInOneTask(spark, options, _)).map { status =>
       // Inference reads SQLConf.get (datetime parser policy, timestamp
       // type); pin it to this session's conf whatever thread calls.
       SQLConf.withExistingConf(conf) {
         val parsed = new CSVOptions(
           options, conf.csvColumnPruning, conf.sessionLocalTimeZone, conf.columnNameOfCorruptRecord)
+        def isHeader(line: String): Boolean =
+          line.exists(_ != ' ') && !(parsed.isCommentSet && line.startsWith(parsed.comment.toString))
         withFileLines(hadoopConf, status) { lines =>
-          val content = CSVUtils.filterCommentAndEmpty(lines, parsed).buffered
+          // Lines before the header are all spaces or comments, which the
+          // Iterator filter below drops as well.
+          val content = lines.dropWhile(!isHeader(_)).buffered
           val headerRow = content.headOption.map(new CsvParser(parsed.asParserSettings).parseLine(_))
           headerRow match {
             case Some(firstRow) if firstRow != null =>
@@ -192,7 +203,8 @@ object Readers {
               val header = CSVUtils.makeSafeHeader(firstRow, conf.caseSensitiveAnalysis, parsed)
               val inference = new CSVInferSchema(parsed)
               val tokenizer = new CsvParser(parsed.asParserSettings)
-              val rootTypes = CSVUtils.filterHeaderLine(content, firstLine, parsed)
+              val dataLines = CSVUtils.filterCommentAndEmpty(content, parsed)
+              val rootTypes = CSVUtils.filterHeaderLine(dataLines, firstLine, parsed)
                 .map(tokenizer.parseLine)
                 .foldLeft(Array.fill[DataType](header.length)(NullType))(inference.inferRowType)
               StructType(inference.toStructFields(rootTypes, header))
@@ -203,19 +215,32 @@ object Readers {
     }
   }
 
-  /** The status of `path` when it names one visible file of at most
-    * `maxBytes`; `None` for globs (Spark expands `{}[]*?\`), directories,
-    * hidden names (`_`/`.` prefixes, which Spark's listing treats
-    * specially), larger files and missing paths.
+  /** Whether Spark reads `status` in one task when it infers a CSV schema
+    * (a text scan of the file): the file's codec is not splittable (gzip),
+    * or the file fits in one split of `FilePartition.maxSplitBytes`, which
+    * weighs `maxPartitionBytes`, `openCostInBytes` and `minPartitionNum`
+    * (default: the session's parallelism). Both tests are Spark's own
+    * code, so the driver path replaces only inference Spark would run on
+    * one core anyway.
     */
-  private def singleSplitFile(hadoopConf: Configuration, path: String, maxBytes: Long): Option[FileStatus] =
+  private def readsInOneTask(spark: SparkSession, options: Map[String, String], status: FileStatus): Boolean = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val splitBytes = FilePartition.maxSplitBytes(session, Seq(PartitionDirectory(InternalRow.empty, Array(status))))
+    status.getLen <= splitBytes || !new TextFileFormat().isSplitable(session, options, status.getPath)
+  }
+
+  /** The status of `path` when it names one visible file; `None` for
+    * globs (Spark expands `{}[]*?\`), directories, hidden names (`_`/`.`
+    * prefixes, which Spark's listing treats specially) and missing paths.
+    */
+  private def singleFile(hadoopConf: Configuration, path: String): Option[FileStatus] =
     if (path.exists("{}[]*?\\".contains(_))) None
     else {
       val p = new Path(path)
       val fs = p.getFileSystem(hadoopConf)
       scala.util.Try(fs.getFileStatus(p)).toOption.filter { st =>
         val name = st.getPath.getName
-        st.isFile && st.getLen <= maxBytes && !name.startsWith("_") && !name.startsWith(".")
+        st.isFile && !name.startsWith("_") && !name.startsWith(".")
       }
     }
 
@@ -239,8 +264,9 @@ object Readers {
     * inputs arrive pre-converted to CSV, this reproduces the multiindex
     * flattening).
     *
-    * The first `headerRows` lines are streamed on the driver (no Spark
-    * job; `path` must name one file), each row forward-filled horizontally
+    * The first `headerRows` lines are read — streamed on the driver with
+    * no Spark job when `path` names one file, else taken from Spark's text
+    * scan of the directory or glob — each row forward-filled horizontally
     * (merged-cell semantics), and the per-column name is the '_'-joined
     * non-empty parts. Data rows are then parsed with [[csvSkipRows]] under
     * the synthesized all-string schema.
@@ -253,10 +279,10 @@ object Readers {
   ): DataFrame = {
     // Through the Hadoop FS (not java.io): works on hdfs://, s3://, ….
     val hadoopConf = spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
-    val p = new Path(path)
-    val status = p.getFileSystem(hadoopConf).getFileStatus(p)
-    require(status.isFile, s"csvMultiHeader reads one file; $path is not a file")
-    val headerLines = withFileLines(hadoopConf, status)(_.take(headerRows).toList)
+    val headerLines = singleFile(hadoopConf, path) match {
+      case Some(status) => withFileLines(hadoopConf, status)(_.take(headerRows).toList)
+      case None => spark.read.textFile(path).take(headerRows).toList
+    }
     val cells = headerLines.map(_.split(java.util.regex.Pattern.quote(sep), -1).toSeq)
     val names = multiHeaderNames(cells)
     val schema = StructType(names.map(n => org.apache.spark.sql.types.StructField(n, org.apache.spark.sql.types.StringType)))

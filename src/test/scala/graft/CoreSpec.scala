@@ -73,13 +73,24 @@ class CoreSpec extends SparkTestBase {
     assert(got.collect().toSeq == want.collect().toSeq, path)
   }
 
-  private def withMaxPartitionBytes[T](bytes: Long)(body: => T): T = {
-    val key = "spark.sql.files.maxPartitionBytes"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, bytes.toString)
+  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    finally prev.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
   }
+
+  /** One split of at most 64 bytes: the fixture files then span several. */
+  private def withTinySplits[T](body: => T): T =
+    withConfs("spark.sql.files.maxPartitionBytes" -> "64")(body)
+
+  /** Spark's split size below `maxPartitionBytes`: with a 64-byte open
+    * cost, `maxSplitBytes` is (size + 64) / 4 under `local[4]`, so a
+    * fixture file spans several splits at the default 128 MB
+    * `maxPartitionBytes`.
+    */
+  private def withSplitsPerCore[T](body: => T): T =
+    withConfs("spark.sql.files.openCostInBytes" -> "64", "spark.sql.files.minPartitionNum" -> "4")(body)
 
   /** Spark jobs started while `body` runs (listener bus drained on both
     * sides, so only this body's jobs are counted).
@@ -109,8 +120,12 @@ class CoreSpec extends SparkTestBase {
     }
     val headerOnly = write(s"$dir/header_only.csv", "a,b,,a\n")
     val empty = write(s"$dir/empty.csv", "")
-    for (p <- Seq(csv, gz, headerOnly, empty)) assertInferParity(p, ",")
-    assertInferParity(tsv, "\t")
+    // A tab-only first line: Spark's header rule trims spaces only, so it
+    // is the header line (its data filter drops it as blank).
+    val tabLeadCsv = write(s"$dir/tab_lead.csv", "\t\t\n" + inferFixture)
+    val tabLeadTsv = write(s"$dir/tab_lead.tsv", "\t\t\n" + inferFixture.replace(',', '\t'))
+    for (p <- Seq(csv, gz, headerOnly, empty, tabLeadCsv)) assertInferParity(p, ",")
+    for (p <- Seq(tsv, tabLeadTsv)) assertInferParity(p, "\t")
     // The fixture really exercises the inferred types.
     val types = Readers.readPath(spark, csv).schema.fields.map(f => f.name -> f.dataType).toMap
     assert(types("score") == DoubleType && types("flag") == BooleanType && types("big") == LongType)
@@ -118,16 +133,20 @@ class CoreSpec extends SparkTestBase {
     assert(Readers.readPath(spark, tsv).columns.contains("quoted,name".replace(',', '\t')))
 
     // Fallbacks to Spark's distributed inference: a directory of parts,
-    // and a file larger than one split.
+    // and a file larger than one split (by maxPartitionBytes, and by the
+    // per-core split size); a gzip file is one task at any size.
     val parts = s"$dir/parts.csv"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(parts))
     write(s"$parts/part-0.csv", inferFixture)
     write(s"$parts/part-1.csv", inferFixture)
     assertInferParity(parts, ",")
-    withMaxPartitionBytes(64) {
+    def multiSplitParity(): Unit = {
       assertInferParity(csv, ",")
       assertInferParity(tsv, "\t")
+      assertInferParity(gz, ",")
     }
+    withTinySplits(multiSplitParity())
+    withSplitsPerCore(multiSplitParity())
   }
 
   test("Readers.readPath builds a CSV/TSV DataFrame without running a Spark job") {
@@ -138,9 +157,30 @@ class CoreSpec extends SparkTestBase {
     assert(jobsDuring(Readers.readPath(spark, tsv)) == 0)
     val multi = write(s"$dir/multi.csv", "id,,metrics,\n,name,p,beta\n1,BRCA1,0.5,-1.25\n")
     assert(jobsDuring(Readers.csvMultiHeader(spark, multi, headerRows = 2)) == 0)
-    // The forced fallback does run Spark's inference jobs, so the count
-    // above tells the two paths apart.
-    assert(withMaxPartitionBytes(64)(jobsDuring(Readers.readPath(spark, csv))) > 0)
+    // gzip is not splittable: Spark would infer it in one task whatever
+    // the split size, so the driver does.
+    val gz = s"$dir/in.csv.gz"
+    scala.util.Using.resource(new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(gz))) {
+      _.write(inferFixture.getBytes("UTF-8"))
+    }
+    assert(withTinySplits(jobsDuring(Readers.readPath(spark, gz))) == 0)
+    // Files that span several splits do run Spark's inference jobs, so
+    // the counts above tell the two paths apart.
+    assert(withTinySplits(jobsDuring(Readers.readPath(spark, csv))) > 0)
+    assert(withSplitsPerCore(jobsDuring(Readers.readPath(spark, tsv))) > 0)
+  }
+
+  test("Readers.csvMultiHeader reads a directory as it reads its one file") {
+    val dir = tmpDir("multi_dir")
+    val text = "id,,metrics,\n,name,p,beta\n1,BRCA1,0.5,-1.25\n2,TP53,0.1,2\n"
+    val file = write(s"$dir/multi.csv", text)
+    val parts = s"$dir/parts"
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(parts))
+    write(s"$parts/part-0.csv", text)
+    val viaFile = Readers.csvMultiHeader(spark, file, headerRows = 2)
+    val viaDir = Readers.csvMultiHeader(spark, parts, headerRows = 2)
+    assert(viaDir.columns.toSeq == viaFile.columns.toSeq)
+    assert(viaDir.collect().toSeq == viaFile.collect().toSeq)
   }
 
   test("Writers.writeJsonGzSingle produces exactly one gz json file (K1)") {
